@@ -287,8 +287,8 @@ object Dedup {
     * Verification is exact bit_count + haversine; candidate multiplicity is
     * bounded (bands × matching cells), removed by the final dropDuplicates
     * on the narrow output. The b side probes its ±360° translate frames
-    * near the antimeridian (the planar grid does not wrap — the knnJoin
-    * seam discipline). Soundness of the adjacency key needs the cell's
+    * near the antimeridian (the planar grid does not wrap). Soundness of
+    * the adjacency key needs the cell's
     * METRIC longitude extent to exceed maxDistM: with res 6 (0.131°) and
     * 500 m that holds to |lat| ≈ 88°; for polar-cap corpora pass a coarser
     * `res` (res 4 ≈ 0.92° holds to ~89.7°) or build candidates with the
@@ -656,7 +656,7 @@ object Dedup {
     * to its label's label (path halving), so convergence is O(log diameter)
     * rounds, not O(diameter). Each round is two narrow equi-join shuffles on
     * ids + one agg; per-round `localCheckpoint` truncates lineage (same
-    * exponential-analysis guard as SpatialJoins.knnJoin). Labels are
+    * exponential-analysis guard as SpatialJoins.knnJoinS2). Labels are
     * pointwise monotone non-increasing, so a stable label sum is a sound
     * convergence certificate (checked as decimal(38) — overflow-safe at any
     * id scale).

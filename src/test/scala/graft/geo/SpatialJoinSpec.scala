@@ -113,23 +113,21 @@ class SpatialJoinSpec extends AnyFunSuite {
   test("hex kNN: null- and NaN-latitude query rows are not silently dropped by polar routing") {
     val pts = spark.range(100).select($"id".as("pid"),
       (pmod($"id" * 7, lit(100)) / 10.0).as("lng"), (pmod($"id" * 13, lit(80)) / 10.0).as("lat"))
-    // NaN is the nastier sibling of null: abs(NaN) > cutoff AND
-    // abs(NaN) <= cutoff are both plain-false, so without the explicit
-    // isnan branch the row vanishes from BOTH routing branches
+    // NaN is the nastier sibling of null: every comparison on it is
+    // plain-false, so a latitude filter anywhere on the path would drop it
     val qs = Seq((1L, Some(5.0), Some(4.0)), (2L, Some(6.0), None),
         (3L, Some(7.0), Some(Double.NaN)))
       .toDF("qid", "qlng", "qlat")
       .select($"qid", $"qlng".cast("double").as("qlng"), $"qlat".cast("double").as("qlat"))
     val out = SpatialJoins.knnJoin(qs, "qid", "qlng", "qlat", pts, "lng", "lat", k = 2, res = 4)
     // the null-lat and NaN-lat queries surface (through the brute tail)
-    // instead of vanishing into neither routing branch
+    // instead of vanishing
     assert(out.select("qid").distinct().as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 
   test("hex kNN auto-routes polar queries through S2 and equals brute force") {
-    // pre-round-4 these queries fell to the brute-force tail (the planar
-    // ring bound never certifies near the poles); now they route through
-    // knnJoinS2 and the MIXED result must still equal brute force exactly
+    // polar and mid-latitude queries in one call: the metric caps certify
+    // at any latitude, and the result must equal brute force exactly
     val pts = spark.range(2500).select(
       $"id".as("pid"),
       (pmod($"id" * 7919, lit(36000)) / 100.0 - 180.0).as("lng"),
@@ -149,6 +147,33 @@ class SpatialJoinSpec extends AnyFunSuite {
       .select("qid", "pid", "rank")
     assert(fast.count() == 20L * k)
     assert(fast.exceptAll(brute).isEmpty && brute.exceptAll(fast).isEmpty)
+  }
+
+  test("knnJoin launches no more Spark jobs than knnJoinS2 on the same inputs") {
+    // knnJoin runs on knnJoinS2's rounds alone; a second loop in front of
+    // them (per-round counts, broadcasts) would show up as extra jobs
+    val pts = points(2000).withColumnRenamed("id", "pid").cache()
+    val qs  = spark.range(30).select(
+      $"id".as("qid"),
+      (pmod($"id" * 31, lit(40)) / 10.0 + 99.5).as("qlng"),
+      when($"id" % 10 === 0, lit(88.0)).otherwise(pmod($"id" * 17, lit(30)) / 10.0 - 0.5)
+        .as("qlat")).cache()
+    pts.count(); qs.count()
+    def jobsOf(run: => Long): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      Thread.sleep(1000) // drain earlier jobs' events before listening
+      spark.sparkContext.addSparkListener(listener)
+      try { run; Thread.sleep(1000); jobs.get() } // listener delivery is async
+      finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val k = 5
+    val s2  = jobsOf(SpatialJoins.knnJoinS2(qs, "qid", "qlng", "qlat", pts, "lng", "lat", k).count())
+    val knn = jobsOf(SpatialJoins.knnJoin(qs, "qid", "qlng", "qlat", pts, "lng", "lat", k, res = 6).count())
+    assert(s2 > 0 && knn <= s2, s"knnJoin ran $knn jobs, knnJoinS2 ran $s2")
   }
 
   test("S2 kNN join equals brute force: uniform, POLAR and seam-crossing queries") {
@@ -372,7 +397,7 @@ class SpatialJoinSpec extends AnyFunSuite {
       .toDF("pid", "lng", "lat")
     val qs = Seq((1L, 10.0, 10.0)).toDF("qid", "qlng", "qlat")
     val out = SpatialJoins.knnJoin(qs, "qid", "qlng", "qlat", pts, "lng", "lat",
-      k = 2, res = 8, maxRadius = 4)
+      k = 2, res = 8)
       .select("pid").as[Long].collect().toSet
     assert(out == Set(1L, 2L)) // the two nearest of the three
   }
