@@ -2,45 +2,30 @@ package graft.geo.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.KernelExpression
 import graft.geo.algo.{GeoAlgo, Overlay}
 import graft.geo.index.{HexCell, S2Cell}
 import graft.geo.json.{GeoJsonCodec, JValue}
 import graft.geo.model.GeoModel.GType
 
-/** Catalyst expressions for the engine's spatial surface (SURVEY.md §2.9,
-  * §7.3). Everything on a hot path generates REAL code (static kernel
-  * calls): the codec kernels (GeoKernelUnary), the join kernels (hex_cell,
-  * s2_cell, st_contains, st_intersects, st_distance_deg, haversine,
-  * tile_key) and the generator/rewrite trio (random_geojson,
-  * with_feature_props, with_feature_geometry) — one CodegenFallback in a
-  * projection ejects the whole Project from whole-stage codegen and kills
-  * subexpression elimination (CLAUDE.md). Cold-path expressions (covers,
-  * measures, error channel) stay interpreted GeoExpressions.
-  */
-abstract class GeoExpression extends Expression with CodegenFallback {
-  override def nullable: Boolean = true
-  // literal-argument calls participate in constant folding (and the
-  // PipPrefilterRule's foldable-geometry detection)
-  override def foldable: Boolean = children.forall(_.foldable)
-  protected def evalNotNull(values: Array[Any]): Any
-  final override def eval(input: InternalRow): Any = {
-    val cs   = children
-    val vals = new Array[Any](cs.length)
-    var i    = 0
-    while (i < cs.length) {
-      val v = cs(i).eval(input)
-      if (v == null) return null
-      vals(i) = v
-      i += 1
-    }
-    evalNotNull(vals)
-  }
-}
+/* Catalyst expressions for the engine's spatial surface (SURVEY.md §2.9,
+ * §7.3). Every expression generates real code, so a projection over them
+ * stays inside whole-stage codegen and keeps subexpression elimination
+ * (one CodegenFallback would eject the whole Project — CLAUDE.md):
+ *  - the primitive hot kernels (st_contains, st_intersects,
+ *    st_distance_deg, haversine, hex_cell, s2_cell, tile_key, tile_bounds,
+ *    random_geojson) are Spark Unary/Binary/Ternary/Quaternary templates
+ *    with a static `defineCodeGen` call;
+ *  - the rewrite pair (with_feature_props, with_feature_geometry) has
+ *    custom genCode, because a null replacement passes the document
+ *    through;
+ *  - everything else (codec, accessors, measures, construction, covers) is
+ *    a [[graft.KernelExpression]].
+ */
 
 /** Accessors over a packed geometry InternalRow (GeoStruct.geometryType). */
 object GeomAccess {
@@ -49,65 +34,70 @@ object GeomAccess {
   @inline def posOff(r: InternalRow): Array[Int]      = r.getArray(2).toIntArray()
   @inline def ringOff(r: InternalRow): Array[Int]     = r.getArray(3).toIntArray()
   @inline def partOff(r: InternalRow): Array[Int]     = r.getArray(4).toIntArray()
-  def childStrings(r: InternalRow): IndexedSeq[String] = {
+
+  /** A collection row's children, parsed and packed one at a time (callers
+    * that stop early parse no further). */
+  def children(r: InternalRow): Iterator[InternalRow] = {
     val a = r.getArray(5)
-    (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
+    Iterator.range(0, a.numElements()).map { i =>
+      GeoStruct.packGeometry(
+        GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(a.getUTF8String(i).toString))
+          .fold(e => throw new IllegalArgumentException(e), identity))
+    }
   }
+
+  /** Apply `f` to every non-collection geometry under `r`, drop the null
+    * (empty) results and rebuild the collection — null when every child
+    * vanished. The construction family's collection discipline. */
+  def mapLeaves(r: InternalRow)(f: InternalRow => InternalRow): InternalRow =
+    if (gtype(r) == GType.Collection) {
+      val kids = children(r).map(mapLeaves(_)(f)).filter(_ != null).toSeq
+      if (kids.isEmpty) null else GeoStruct.packCollection(kids, r)
+    } else f(r)
 
   /** Per-ring wrapped boxes of a geometry row (recursing into collections). */
   def wrappedBoxes(r: InternalRow): Array[Array[Double]] =
-    if (gtype(r) == GType.Collection)
-      childStrings(r).toArray.flatMap { s =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-          .fold(e => throw new IllegalArgumentException(e), identity)
-        wrappedBoxes(GeoStruct.packGeometry(g))
-      }
+    if (gtype(r) == GType.Collection) children(r).flatMap(wrappedBoxes).toArray
     else GeoAlgo.ringWrappedBoxes(coords(r), posOff(r), ringOff(r))
+
+  /** Sorted, distinct cells of `cover` applied to every wrapped box. */
+  def coverCells(r: InternalRow)(cover: Array[Double] => Array[Long]): Array[Long] = {
+    val cells = wrappedBoxes(r).flatMap(cover)
+    java.util.Arrays.sort(cells)
+    var n = 0
+    var i = 0
+    while (i < cells.length) {
+      if (n == 0 || cells(n - 1) != cells(i)) { cells(n) = cells(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(cells, n)
+  }
 
   /** General intersects over packed rows — any dimension pair (point/line/
     * polygon); recurses into collections. */
-  def intersects(a: InternalRow, b: InternalRow): Boolean = {
-    if (gtype(a) == GType.Collection)
-      return childStrings(a).exists { s =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-          .fold(e => throw new IllegalArgumentException(e), identity)
-        intersects(GeoStruct.packGeometry(g), b)
-      }
-    if (gtype(b) == GType.Collection)
-      return childStrings(b).exists { s =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-          .fold(e => throw new IllegalArgumentException(e), identity)
-        intersects(a, GeoStruct.packGeometry(g))
-      }
-    GeoAlgo.intersectsGeoms(
+  def intersects(a: InternalRow, b: InternalRow): Boolean =
+    if (gtype(a) == GType.Collection) children(a).exists(intersects(_, b))
+    else if (gtype(b) == GType.Collection) children(b).exists(intersects(a, _))
+    else GeoAlgo.intersectsGeoms(
       gtype(a), coords(a), posOff(a), ringOff(a), partOff(a),
       gtype(b), coords(b), posOff(b), ringOff(b), partOff(b))
-  }
 
   /** Planar degree distance over the packed row (collections: min over
     * children). */
   def distanceDeg(r: InternalRow, lng: Double, lat: Double): Double =
     if (gtype(r) == GType.Collection)
-      childStrings(r).map { s =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-          .fold(e => throw new IllegalArgumentException(e), identity)
-        distanceDeg(GeoStruct.packGeometry(g), lng, lat)
-      }.foldLeft(Double.NaN)((a, b) => if (a.isNaN || b < a) b else a)
+      children(r).map(distanceDeg(_, lng, lat))
+        .foldLeft(Double.NaN)((a, b) => if (a.isNaN || b < a) b else a)
     else GeoAlgo.distanceDeg(gtype(r), coords(r), posOff(r), ringOff(r), partOff(r), lng, lat)
 
   /** st_contains kernel over the packed row (recursing into collections). */
   def contains(r: InternalRow, lng: Double, lat: Double): Boolean =
-    if (gtype(r) == GType.Collection)
-      childStrings(r).exists { s =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-          .fold(e => throw new IllegalArgumentException(e), identity)
-        contains(GeoStruct.packGeometry(g), lng, lat)
-      }
+    if (gtype(r) == GType.Collection) children(r).exists(contains(_, lng, lat))
     else GeoAlgo.contains(gtype(r), coords(r), posOff(r), ringOff(r), partOff(r), lng, lat)
 }
 
-/** Static kernel entry points for generated code (Scala object = static
-  * forwarders, same pattern as GeoAlgo/HexCell calls in codegen). */
+/** The codec kernels, plus the static entry points of the rewrite pair's and
+  * random_geojson's generated code (Scala object = static forwarders). */
 object GeoRuntime {
   def fromGeoJson(s: UTF8String): InternalRow = {
     val text = s.toString
@@ -133,9 +123,6 @@ object GeoRuntime {
     GeoJsonCodec.writeGeometry(b, GeoStruct.unpackGeometry(r))
     UTF8String.fromString(b.toString)
   }
-
-  def geometryTypeName(r: InternalRow): UTF8String =
-    UTF8String.fromString(GType.name(GeomAccess.gtype(r)))
 
   def randomGeoJson(id: Long, seed: Long): UTF8String =
     UTF8String.fromString(GeoJsonCodec.render(graft.geo.gen.GeoGen.docFor(id, seed)))
@@ -170,32 +157,16 @@ object GeoRuntime {
   }
 }
 
-/** Base for the codec kernels: REAL codegen (a static GeoRuntime call), so
-  * projections containing them stay inside WholeStageCodegen and Spark's
-  * subexpression elimination collapses repeated parses of the same column —
-  * with CodegenFallback the Project is kicked out of whole-stage codegen and
-  * each field extraction re-parses (measured ~Nx for N fields). */
-abstract class GeoKernelUnary extends UnaryExpression {
-  override def nullable: Boolean = true
-  /** fully-qualified static method UTF8String/InternalRow → value-or-null */
-  protected def kernel: String
-  override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $kernel($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-}
-
 /** `from_geojson(str)` — parse a GeoJSON text to the packed top-level struct
   * (SURVEY.md §2.1, geojson.ml:485-510). Parse errors → null (PERMISSIVE
   * mode, the documented divergence from jsone's resync recovery).
   */
-case class FromGeoJson(child: Expression) extends GeoKernelUnary {
-  override def dataType: DataType = GeoStruct.topType
-  override protected def kernel   = "graft.geo.sql.GeoRuntime.fromGeoJson"
-  override protected def nullSafeEval(v: Any): Any =
-    GeoRuntime.fromGeoJson(v.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+case class FromGeoJson(child: Expression) extends KernelExpression {
+  override def children: Seq[Expression] = Seq(child)
+  override def dataType: DataType        = GeoStruct.topType
+  override def evalNotNull(v: Array[Any]): Any =
+    GeoRuntime.fromGeoJson(v(0).asInstanceOf[UTF8String])
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
 /** `geojson_error(str)` — the reference's `result` error channel with its
@@ -204,12 +175,12 @@ case class FromGeoJson(child: Expression) extends GeoKernelUnary {
   * failures carry the failure point; semantic decode failures carry the
   * end-of-value position (eager analogue of the streaming decoder's
   * decoded_range). */
-case class GeoJsonError(child: Expression) extends GeoExpression {
+case class GeoJsonError(child: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(child)
   override def dataType: DataType = StructType(Seq(
     StructField("msg", StringType), StructField("line", IntegerType),
     StructField("col", IntegerType)))
-  override protected def evalNotNull(v: Array[Any]): Any =
+  override def evalNotNull(v: Array[Any]): Any =
     GeoJsonCodec.parseWithError(v(0).asInstanceOf[UTF8String].toString)
       .fold(e => InternalRow(UTF8String.fromString(e.msg), e.line, e.col), _ => null)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
@@ -314,10 +285,10 @@ case class WithFeatureGeometry(json: Expression, geom: Expression)
   * an object. Unparseable `json` or `value_json` → null (PERMISSIVE).
   * Output is re-serialized canonically (minified, %.16g floats). */
 case class JsonUpdate(json: Expression, path: Expression, value: Expression)
-    extends GeoExpression {
+    extends KernelExpression {
   override def children: Seq[Expression] = Seq(json, path, value)
   override def dataType: DataType        = StringType
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val doc = JValue.parse(v(0).asInstanceOf[UTF8String].toString)
     val nv  = JValue.parse(v(2).asInstanceOf[UTF8String].toString)
     (doc, nv) match {
@@ -336,10 +307,10 @@ case class JsonUpdate(json: Expression, path: Expression, value: Expression)
   * `Ezjsone.update` with `None` (same `map_dict` semantics as
   * [[JsonUpdate]]; removing a missing member is a no-op; an empty path is
   * `Not_found` → null, as in the reference). */
-case class JsonRemove(json: Expression, path: Expression) extends GeoExpression {
+case class JsonRemove(json: Expression, path: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(json, path)
   override def dataType: DataType        = StringType
-  override protected def evalNotNull(v: Array[Any]): Any =
+  override def evalNotNull(v: Array[Any]): Any =
     JValue.parse(v(0).asInstanceOf[UTF8String].toString).fold(_ => null, d =>
       graft.geo.json.JsonPath
         .remove(d, graft.geo.json.JsonPath.parsePath(v(1).asInstanceOf[UTF8String].toString))
@@ -373,21 +344,21 @@ case class RandomGeoJson(id: Expression, seed: Expression)
 /** `to_geojson(top_struct)` — serialize back to minified GeoJSON text with
   * reference key order and %.16g floats (geojson.ml:512-516, jsone.ml:818).
   */
-case class ToGeoJson(child: Expression) extends GeoKernelUnary {
-  override def dataType: DataType = StringType
-  override protected def kernel   = "graft.geo.sql.GeoRuntime.toGeoJson"
-  override protected def nullSafeEval(v: Any): Any =
-    GeoRuntime.toGeoJson(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+case class ToGeoJson(child: Expression) extends KernelExpression {
+  override def children: Seq[Expression] = Seq(child)
+  override def dataType: DataType        = StringType
+  override def evalNotNull(v: Array[Any]): Any =
+    GeoRuntime.toGeoJson(v(0).asInstanceOf[InternalRow])
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
 /** `to_geojson_pretty(top_struct)` — the reference encoder's ~minify:false
   * mode: 2-space indent, one member/value per line (jsone.ml:751-767,
   * 839-900). */
-case class ToGeoJsonPretty(child: Expression) extends GeoExpression {
+case class ToGeoJsonPretty(child: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(child)
   override def dataType: DataType        = StringType
-  override protected def evalNotNull(v: Array[Any]): Any =
+  override def evalNotNull(v: Array[Any]): Any =
     UTF8String.fromString(
       GeoJsonCodec.renderPretty(GeoStruct.unpackTop(v(0).asInstanceOf[InternalRow])))
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
@@ -399,21 +370,21 @@ case class ToGeoJsonPretty(child: Expression) extends GeoExpression {
   * trees); everything else (foreign members, bbox, collections, unusual key
   * order, errors) takes the general codec path — byte-identical results
   * asserted differentially in GeoParseSpec. */
-case class FromGeoJsonGeom(child: Expression) extends GeoKernelUnary {
-  override def dataType: DataType = GeoStruct.geometryType
-  override protected def kernel   = "graft.geo.sql.GeoRuntime.fromGeoJsonGeom"
-  override protected def nullSafeEval(v: Any): Any =
-    GeoRuntime.fromGeoJsonGeom(v.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+case class FromGeoJsonGeom(child: Expression) extends KernelExpression {
+  override def children: Seq[Expression] = Seq(child)
+  override def dataType: DataType        = GeoStruct.geometryType
+  override def evalNotNull(v: Array[Any]): Any =
+    GeoRuntime.fromGeoJsonGeom(v(0).asInstanceOf[UTF8String])
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
 /** `to_geojson_geom(geom_struct)` — serialize a bare geometry. */
-case class ToGeoJsonGeom(child: Expression) extends GeoKernelUnary {
-  override def dataType: DataType = StringType
-  override protected def kernel   = "graft.geo.sql.GeoRuntime.toGeoJsonGeom"
-  override protected def nullSafeEval(v: Any): Any =
-    GeoRuntime.toGeoJsonGeom(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+case class ToGeoJsonGeom(child: Expression) extends KernelExpression {
+  override def children: Seq[Expression] = Seq(child)
+  override def dataType: DataType        = StringType
+  override def evalNotNull(v: Array[Any]): Any =
+    GeoRuntime.toGeoJsonGeom(v(0).asInstanceOf[InternalRow])
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
 /** `st_contains(geom, lng, lat)` — ray-casting PIP with winding-number
@@ -455,11 +426,11 @@ case class StIntersects(a: Expression, b: Expression) extends BinaryExpression {
 /** `s2_cell_ancestors(cell, minLevel)` → the cell plus its ancestors down
   * to minLevel (the containment-key side of the intersects join). */
 case class S2CellAncestorsExpr(cell: Expression, minLevel: Expression)
-    extends GeoExpression with ImplicitCastInputTypes {
+    extends KernelExpression with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(cell, minLevel)
   override def inputTypes = Seq(LongType, IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val id   = v(0).asInstanceOf[Long]
     val minL = v(1).asInstanceOf[Int]
     val lvl  = S2Cell.level(id)
@@ -494,10 +465,10 @@ case class StDistanceDeg(geom: Expression, lng: Expression, lat: Expression)
 
 /** `st_bbox(geom)` → [w, s, e, n] (naive min/max; see hex_cover/s2_cover for
   * the antimeridian-aware boxes used by joins). */
-case class StBBox(child: Expression) extends GeoExpression {
+case class StBBox(child: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(child)
   override def dataType: DataType        = ArrayType(DoubleType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val r = v(0).asInstanceOf[InternalRow]
     if (GeomAccess.gtype(r) == GType.Collection) {
       val boxes = GeomAccess.wrappedBoxes(r)
@@ -512,10 +483,10 @@ case class StBBox(child: Expression) extends GeoExpression {
 
 /** `st_centroid(geom)` → [lng, lat] (planar, JTS-matching semantics per
   * dimension class; collections via children). */
-case class StCentroid(child: Expression) extends GeoExpression {
+case class StCentroid(child: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(child)
   override def dataType: DataType        = ArrayType(DoubleType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val r = v(0).asInstanceOf[InternalRow]
     if (GeomAccess.gtype(r) == GType.Collection) return null // dimension mix: undefined here
     val (x, y) = GeoAlgo.centroid(GeomAccess.gtype(r), GeomAccess.coords(r),
@@ -526,22 +497,14 @@ case class StCentroid(child: Expression) extends GeoExpression {
 }
 
 /** `st_area(geom)` → planar square degrees (|shell| - Σ|holes|). */
-case class StArea(child: Expression) extends GeoExpression {
+case class StArea(child: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(child)
   override def dataType: DataType        = DoubleType
-  override protected def evalNotNull(v: Array[Any]): Any = {
-    val r = v(0).asInstanceOf[InternalRow]
-    if (GeomAccess.gtype(r) == GType.Collection)
-      GeomAccess.childStrings(r).map { s =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-          .fold(e => throw new IllegalArgumentException(e), identity)
-        StArea(Literal(GeoStruct.packGeometry(g), GeoStruct.geometryType))
-          .eval(null).asInstanceOf[Double]
-      }.sum
-    else
-      GeoAlgo.area(GeomAccess.gtype(r), GeomAccess.coords(r), GeomAccess.posOff(r),
-        GeomAccess.ringOff(r), GeomAccess.partOff(r))
-  }
+  private def area(r: InternalRow): Double =
+    if (GeomAccess.gtype(r) == GType.Collection) GeomAccess.children(r).map(area).sum
+    else GeoAlgo.area(GeomAccess.gtype(r), GeomAccess.coords(r), GeomAccess.posOff(r),
+      GeomAccess.ringOff(r), GeomAccess.partOff(r))
+  override def evalNotNull(v: Array[Any]): Any = area(v(0).asInstanceOf[InternalRow])
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
@@ -550,22 +513,14 @@ case class StArea(child: Expression) extends GeoExpression {
   * length. Exact line integral R²∮sin(φ)dλ with edges linear in degree
   * space (the engine's st_contains edge model); |shell| − Σ|holes|;
   * collections sum their areal children; non-areal → 0. */
-case class StAreaM2(child: Expression) extends GeoExpression {
+case class StAreaM2(child: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(child)
   override def dataType: DataType        = DoubleType
-  override protected def evalNotNull(v: Array[Any]): Any = {
-    val r = v(0).asInstanceOf[InternalRow]
-    if (GeomAccess.gtype(r) == GType.Collection)
-      GeomAccess.childStrings(r).map { s =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-          .fold(e => throw new IllegalArgumentException(e), identity)
-        StAreaM2(Literal(GeoStruct.packGeometry(g), GeoStruct.geometryType))
-          .eval(null).asInstanceOf[Double]
-      }.sum
-    else
-      GeoAlgo.areaM2(GeomAccess.gtype(r), GeomAccess.coords(r), GeomAccess.posOff(r),
-        GeomAccess.ringOff(r), GeomAccess.partOff(r))
-  }
+  private def areaM2(r: InternalRow): Double =
+    if (GeomAccess.gtype(r) == GType.Collection) GeomAccess.children(r).map(areaM2).sum
+    else GeoAlgo.areaM2(GeomAccess.gtype(r), GeomAccess.coords(r), GeomAccess.posOff(r),
+      GeomAccess.ringOff(r), GeomAccess.partOff(r))
+  override def evalNotNull(v: Array[Any]): Any = areaM2(v(0).asInstanceOf[InternalRow])
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
@@ -576,29 +531,18 @@ case class StAreaM2(child: Expression) extends GeoExpression {
   * GeometryCollection → its children, single geometries → [self]. Parts
   * keep part order; container foreign members stay on the container (a
   * part's fm is its own only for collection children). */
-case class StParts(child: Expression) extends GeoExpression {
+case class StParts(child: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(child)
   override def dataType: DataType = ArrayType(GeoStruct.geometryType, containsNull = false)
   private def mk(gt: Int, coords: Array[Double], posOff: Array[Int],
-                 ringOff: Array[Int]): InternalRow = {
-    val out = new GenericInternalRow(7)
-    out.update(0, gt.toByte)
-    out.update(1, new GenericArrayData(coords))
-    out.update(2, new GenericArrayData(posOff))
-    out.update(3, new GenericArrayData(ringOff))
-    out.update(4, new GenericArrayData(Array(0, ringOff.length - 1)))
-    out
-  }
-  override protected def evalNotNull(v: Array[Any]): Any = {
+                 ringOff: Array[Int]): InternalRow =
+    GeoStruct.packClipped(
+      GeoAlgo.Clipped(gt, coords, posOff, ringOff, Array(0, ringOff.length - 1)), null)
+  override def evalNotNull(v: Array[Any]): Any = {
     val r  = v(0).asInstanceOf[InternalRow]
     val gt = GeomAccess.gtype(r)
     val parts: Array[Any] = gt match {
-      case GType.Collection =>
-        GeomAccess.childStrings(r).map { s =>
-          val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-            .fold(e => throw new IllegalArgumentException(e), identity)
-          GeoStruct.packGeometry(g): Any
-        }.toArray
+      case GType.Collection => GeomAccess.children(r).toArray[Any]
       case GType.MultiPoint =>
         val c = GeomAccess.coords(r); val p = GeomAccess.posOff(r)
         Array.tabulate[Any](p.length - 1) { i =>
@@ -633,21 +577,17 @@ case class StParts(child: Expression) extends GeoExpression {
   * children's positions. Fewer than 3 non-collinear distinct points have no
   * areal hull → null (Optional semantics; JTS degrades to Point/LineString
   * instead — callers wanting that keep the original geometry). */
-case class StConvexHull(child: Expression) extends GeoExpression {
+case class StConvexHull(child: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(child)
   override def dataType: DataType        = GeoStruct.geometryType
   private def positions(r: InternalRow): Array[(Double, Double)] =
     if (GeomAccess.gtype(r) == GType.Collection)
-      GeomAccess.childStrings(r).toArray.flatMap { s =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-          .fold(e => throw new IllegalArgumentException(e), identity)
-        positions(GeoStruct.packGeometry(g))
-      }
+      GeomAccess.children(r).flatMap(positions).toArray
     else {
       val c = GeomAccess.coords(r); val p = GeomAccess.posOff(r)
       Array.tabulate(p.length - 1)(i => (c(p(i)), c(p(i) + 1)))
     }
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val hull = GeoAlgo.convexHull(positions(v(0).asInstanceOf[InternalRow]))
     if (hull.isEmpty) null
     else {
@@ -659,13 +599,8 @@ case class StConvexHull(child: Expression) extends GeoExpression {
         coords(i * 2) = hull(i)._1; coords(i * 2 + 1) = hull(i)._2; i += 1
       }
       coords(hull.length * 2) = hull(0)._1; coords(hull.length * 2 + 1) = hull(0)._2
-      val out = new GenericInternalRow(7)
-      out.update(0, GType.Polygon.toByte)
-      out.update(1, new GenericArrayData(coords))
-      out.update(2, new GenericArrayData(posOff))
-      out.update(3, new GenericArrayData(Array(0, nPos)))
-      out.update(4, new GenericArrayData(Array(0, 1)))
-      out
+      GeoStruct.packClipped(
+        GeoAlgo.Clipped(GType.Polygon, coords, posOff, Array(0, nPos), Array(0, 1)), null)
     }
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
@@ -678,45 +613,19 @@ case class StConvexHull(child: Expression) extends GeoExpression {
   * are a subset of the original vertices (altitudes ride along untouched)
   * and every dropped vertex lies within `tol` of the simplified chain —
   * both spec-pinned. */
-case class StSimplify(geom: Expression, tol: Expression) extends GeoExpression {
+case class StSimplify(geom: Expression, tol: Expression)
+    extends KernelExpression with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(geom, tol)
-  override def dataType: DataType        = GeoStruct.geometryType
-  private def tolOf(v: Any): Double = v match {
-    case d: Double => d
-    case f: Float  => f.toDouble
-    case i: Int    => i.toDouble
-    case l: Long   => l.toDouble
-    case x: java.math.BigDecimal => x.doubleValue()
-    case x: org.apache.spark.sql.types.Decimal => x.toDouble
-  }
-  private def simplified(r: InternalRow, t: Double): InternalRow =
-    if (GeomAccess.gtype(r) == GType.Collection) {
-      val out = new GenericInternalRow(7)
-      out.update(0, r.getByte(0))
-      out.update(5, new GenericArrayData(GeomAccess.childStrings(r).map { s =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-          .fold(e => throw new IllegalArgumentException(e), identity)
-        val child = simplified(GeoStruct.packGeometry(g), t)
-        UTF8String.fromString(
-          GeoJsonCodec.geometryToJson(GeoStruct.unpackGeometry(child)).render)
-      }.toArray[Any]))
-      out.update(6, r.get(6, GeoStruct.geometryType("fm").dataType))
-      out
-    } else {
-      val (c2, p2, r2, f2) = GeoAlgo.simplify(GeomAccess.gtype(r),
-        GeomAccess.coords(r), GeomAccess.posOff(r), GeomAccess.ringOff(r),
-        GeomAccess.partOff(r), t)
-      val out = new GenericInternalRow(7)
-      out.update(0, r.getByte(0))
-      out.update(1, new GenericArrayData(c2))
-      out.update(2, new GenericArrayData(p2))
-      out.update(3, new GenericArrayData(r2))
-      out.update(4, new GenericArrayData(f2))
-      out.update(6, r.get(6, GeoStruct.geometryType("fm").dataType))
-      out
+  override def inputTypes = Seq(GeoStruct.geometryType, DoubleType)
+  override def dataType: DataType = GeoStruct.geometryType
+  override def evalNotNull(v: Array[Any]): Any = {
+    val t = v(1).asInstanceOf[Double]
+    GeomAccess.mapLeaves(v(0).asInstanceOf[InternalRow]) { r =>
+      val (c, p, ro, po) = GeoAlgo.simplify(GeomAccess.gtype(r), GeomAccess.coords(r),
+        GeomAccess.posOff(r), GeomAccess.ringOff(r), GeomAccess.partOff(r), t)
+      GeoStruct.packClipped(GeoAlgo.Clipped(GeomAccess.gtype(r), c, p, ro, po), r)
     }
-  override protected def evalNotNull(v: Array[Any]): Any =
-    simplified(v(0).asInstanceOf[InternalRow], tolOf(v(1)))
+  }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
 
@@ -733,52 +642,19 @@ case class StSimplify(geom: Expression, tol: Expression) extends GeoExpression {
   * the empties (null when all children vanish). The box must not cross
   * the antimeridian (w <= e; clip twice for a crossing box). */
 case class StClipBox(geom: Expression, w: Expression, s: Expression,
-                     e: Expression, n: Expression) extends GeoExpression {
+                     e: Expression, n: Expression)
+    extends KernelExpression with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(geom, w, s, e, n)
-  override def dataType: DataType        = GeoStruct.geometryType
-  private def num(v: Any): Double = v match {
-    case d: Double => d
-    case f: Float  => f.toDouble
-    case i: Int    => i.toDouble
-    case l: Long   => l.toDouble
-    case x: java.math.BigDecimal => x.doubleValue()
-    case x: org.apache.spark.sql.types.Decimal => x.toDouble
-  }
-  private def clipped(r: InternalRow, w: Double, s: Double, e: Double, n: Double): InternalRow =
-    if (GeomAccess.gtype(r) == GType.Collection) {
-      val kids = GeomAccess.childStrings(r).flatMap { str =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(str))
-          .fold(err => throw new IllegalArgumentException(err), identity)
-        Option(clipped(GeoStruct.packGeometry(g), w, s, e, n)).map(child =>
-          UTF8String.fromString(
-            GeoJsonCodec.geometryToJson(GeoStruct.unpackGeometry(child)).render))
-      }
-      if (kids.isEmpty) null
-      else {
-        val out = new GenericInternalRow(7)
-        out.update(0, r.getByte(0))
-        out.update(5, new GenericArrayData(kids.toArray[Any]))
-        out.update(6, r.get(6, GeoStruct.geometryType("fm").dataType))
-        out
-      }
-    } else {
-      val c = GeoAlgo.clipBox(GeomAccess.gtype(r), GeomAccess.coords(r),
+  override def inputTypes = GeoStruct.geometryType +: Seq.fill(4)(DoubleType)
+  override def dataType: DataType = GeoStruct.geometryType
+  override def evalNotNull(v: Array[Any]): Any = {
+    def box(i: Int) = v(i).asInstanceOf[Double]
+    GeomAccess.mapLeaves(v(0).asInstanceOf[InternalRow]) { r =>
+      GeoStruct.packClipped(GeoAlgo.clipBox(GeomAccess.gtype(r), GeomAccess.coords(r),
         GeomAccess.posOff(r), GeomAccess.ringOff(r), GeomAccess.partOff(r),
-        w, s, e, n)
-      if (c == null) null
-      else {
-        val out = new GenericInternalRow(7)
-        out.update(0, c.gtype.toByte)
-        out.update(1, new GenericArrayData(c.coords))
-        out.update(2, new GenericArrayData(c.posOff))
-        out.update(3, new GenericArrayData(c.ringOff))
-        out.update(4, new GenericArrayData(c.partOff))
-        out.update(6, r.get(6, GeoStruct.geometryType("fm").dataType))
-        out
-      }
+        box(1), box(2), box(3), box(4)), r)
     }
-  override protected def evalNotNull(v: Array[Any]): Any =
-    clipped(v(0).asInstanceOf[InternalRow], num(v(1)), num(v(2)), num(v(3)), num(v(4)))
+  }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(c(0), c(1), c(2), c(3), c(4))
 }
@@ -797,52 +673,19 @@ case class StClipBox(geom: Expression, w: Expression, s: Expression,
   * promote (a carved Polygon → MultiPolygon). Collections erase each child
   * and drop the emptied ones. Box must not cross the antimeridian. */
 case class StEraseBox(geom: Expression, w: Expression, s: Expression,
-                      e: Expression, n: Expression) extends GeoExpression {
+                      e: Expression, n: Expression)
+    extends KernelExpression with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(geom, w, s, e, n)
-  override def dataType: DataType        = GeoStruct.geometryType
-  private def num(v: Any): Double = v match {
-    case d: Double => d
-    case f: Float  => f.toDouble
-    case i: Int    => i.toDouble
-    case l: Long   => l.toDouble
-    case x: java.math.BigDecimal => x.doubleValue()
-    case x: org.apache.spark.sql.types.Decimal => x.toDouble
-  }
-  private def erased(r: InternalRow, w: Double, s: Double, e: Double, n: Double): InternalRow =
-    if (GeomAccess.gtype(r) == GType.Collection) {
-      val kids = GeomAccess.childStrings(r).flatMap { str =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(str))
-          .fold(err => throw new IllegalArgumentException(err), identity)
-        Option(erased(GeoStruct.packGeometry(g), w, s, e, n)).map(child =>
-          UTF8String.fromString(
-            GeoJsonCodec.geometryToJson(GeoStruct.unpackGeometry(child)).render))
-      }
-      if (kids.isEmpty) null
-      else {
-        val out = new GenericInternalRow(7)
-        out.update(0, r.getByte(0))
-        out.update(5, new GenericArrayData(kids.toArray[Any]))
-        out.update(6, r.get(6, GeoStruct.geometryType("fm").dataType))
-        out
-      }
-    } else {
-      val c = GeoAlgo.eraseBox(GeomAccess.gtype(r), GeomAccess.coords(r),
+  override def inputTypes = GeoStruct.geometryType +: Seq.fill(4)(DoubleType)
+  override def dataType: DataType = GeoStruct.geometryType
+  override def evalNotNull(v: Array[Any]): Any = {
+    def box(i: Int) = v(i).asInstanceOf[Double]
+    GeomAccess.mapLeaves(v(0).asInstanceOf[InternalRow]) { r =>
+      GeoStruct.packClipped(GeoAlgo.eraseBox(GeomAccess.gtype(r), GeomAccess.coords(r),
         GeomAccess.posOff(r), GeomAccess.ringOff(r), GeomAccess.partOff(r),
-        w, s, e, n)
-      if (c == null) null
-      else {
-        val out = new GenericInternalRow(7)
-        out.update(0, c.gtype.toByte)
-        out.update(1, new GenericArrayData(c.coords))
-        out.update(2, new GenericArrayData(c.posOff))
-        out.update(3, new GenericArrayData(c.ringOff))
-        out.update(4, new GenericArrayData(c.partOff))
-        out.update(6, r.get(6, GeoStruct.geometryType("fm").dataType))
-        out
-      }
+        box(1), box(2), box(3), box(4)), r)
     }
-  override protected def evalNotNull(v: Array[Any]): Any =
-    erased(v(0).asInstanceOf[InternalRow], num(v(1)), num(v(2)), num(v(3)), num(v(4)))
+  }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(c(0), c(1), c(2), c(3), c(4))
 }
@@ -861,7 +704,7 @@ case class StEraseBox(geom: Expression, w: Expression, s: Expression,
   * collections clip each child and drop the empties. A rectangle clip ring
   * reproduces st_clip_box exactly up to ring rotation. A literal clip
   * polygon's shell is extracted ONCE per operator instance, not per row. */
-case class StClipConvex(geom: Expression, clip: Expression) extends GeoExpression {
+case class StClipConvex(geom: Expression, clip: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(geom, clip)
   override def dataType: DataType        = GeoStruct.geometryType
   private def shellOf(c: InternalRow): (Array[Double], Array[Double]) =
@@ -871,43 +714,14 @@ case class StClipConvex(geom: Expression, clip: Expression) extends GeoExpressio
   // convexity check per operator instance instead of per row
   @transient private lazy val foldedShell: (Array[Double], Array[Double]) =
     shellOf(clip.eval(null).asInstanceOf[InternalRow])
-  private def clipped(r: InternalRow, cxs: Array[Double], cys: Array[Double]): InternalRow =
-    if (GeomAccess.gtype(r) == GType.Collection) {
-      val kids = GeomAccess.childStrings(r).flatMap { str =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(str))
-          .fold(err => throw new IllegalArgumentException(err), identity)
-        Option(clipped(GeoStruct.packGeometry(g), cxs, cys)).map(child =>
-          UTF8String.fromString(
-            GeoJsonCodec.geometryToJson(GeoStruct.unpackGeometry(child)).render))
-      }
-      if (kids.isEmpty) null
-      else {
-        val out = new GenericInternalRow(7)
-        out.update(0, r.getByte(0))
-        out.update(5, new GenericArrayData(kids.toArray[Any]))
-        out.update(6, r.get(6, GeoStruct.geometryType("fm").dataType))
-        out
-      }
-    } else {
-      val c = GeoAlgo.clipConvex(GeomAccess.gtype(r), GeomAccess.coords(r),
-        GeomAccess.posOff(r), GeomAccess.ringOff(r), GeomAccess.partOff(r),
-        cxs, cys)
-      if (c == null) null
-      else {
-        val out = new GenericInternalRow(7)
-        out.update(0, c.gtype.toByte)
-        out.update(1, new GenericArrayData(c.coords))
-        out.update(2, new GenericArrayData(c.posOff))
-        out.update(3, new GenericArrayData(c.ringOff))
-        out.update(4, new GenericArrayData(c.partOff))
-        out.update(6, r.get(6, GeoStruct.geometryType("fm").dataType))
-        out
-      }
-    }
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val shell =
       if (clip.foldable) foldedShell else shellOf(v(1).asInstanceOf[InternalRow])
-    clipped(v(0).asInstanceOf[InternalRow], shell._1, shell._2)
+    GeomAccess.mapLeaves(v(0).asInstanceOf[InternalRow]) { r =>
+      GeoStruct.packClipped(GeoAlgo.clipConvex(GeomAccess.gtype(r), GeomAccess.coords(r),
+        GeomAccess.posOff(r), GeomAccess.ringOff(r), GeomAccess.partOff(r),
+        shell._1, shell._2), r)
+    }
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(c(0), c(1))
@@ -948,7 +762,7 @@ case class StClipConvex(geom: Expression, clip: Expression) extends GeoExpressio
   * A stand-alone scalar kernel: at scale it runs row-local AFTER the
   * cell-cover equi-join has reduced candidate pairs, so the plan shape of
   * q03/q58 is unchanged — no exchange is introduced by construction. */
-case class StOverlay(a: Expression, b: Expression, op: Int) extends GeoExpression {
+case class StOverlay(a: Expression, b: Expression, op: Int) extends KernelExpression {
   override def children: Seq[Expression] = Seq(a, b)
   override def dataType: DataType        = GeoStruct.geometryType
   private def areal(gt: Int)  = gt == 5 || gt == 6
@@ -959,22 +773,12 @@ case class StOverlay(a: Expression, b: Expression, op: Int) extends GeoExpressio
     case Overlay.OpDifference   => "st_difference"
     case _                      => "st_union"
   }
+  // the SUBJECT's foreign members survive (the operand the output geometry
+  // derives from: A for areal ops, the thin operand on the swapped
+  // mixed-dimension routes) — the clip-family convention
   private def pack(src: InternalRow)(c: GeoAlgo.Clipped): InternalRow =
-    if (c == null) null
-    else {
-      val out = new GenericInternalRow(7)
-      out.update(0, c.gtype.toByte)
-      out.update(1, new GenericArrayData(c.coords))
-      out.update(2, new GenericArrayData(c.posOff))
-      out.update(3, new GenericArrayData(c.ringOff))
-      out.update(4, new GenericArrayData(c.partOff))
-      // the SUBJECT's foreign members survive (the operand the output
-      // geometry derives from: A for areal ops, the thin operand on the
-      // swapped mixed-dimension routes) — the clip-family convention
-      out.update(6, src.get(6, GeoStruct.geometryType("fm").dataType))
-      out
-    }
-  override protected def evalNotNull(v: Array[Any]): Any = {
+    GeoStruct.packClipped(c, src)
+  override def evalNotNull(v: Array[Any]): Any = {
     val ra = v(0).asInstanceOf[InternalRow]
     val rb = v(1).asInstanceOf[InternalRow]
     val ga = GeomAccess.gtype(ra); val gb = GeomAccess.gtype(rb)
@@ -986,20 +790,8 @@ case class StOverlay(a: Expression, b: Expression, op: Int) extends GeoExpressio
     if (ga == GType.Collection) {
       require(op != Overlay.OpUnion,
         s"$opName: union with a GeometryCollection subject is not defined")
-      val kids = GeomAccess.childStrings(ra).flatMap { str =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(str))
-          .fold(err => throw new IllegalArgumentException(err), identity)
-        Option(evalNotNull(Array[Any](GeoStruct.packGeometry(g), rb))
-          .asInstanceOf[InternalRow]).map(child =>
-          UTF8String.fromString(
-            GeoJsonCodec.geometryToJson(GeoStruct.unpackGeometry(child)).render))
-      }
-      if (kids.isEmpty) return null
-      val out = new GenericInternalRow(7)
-      out.update(0, GType.Collection.toByte)
-      out.update(5, new GenericArrayData(kids.toArray[Any]))
-      out.update(6, ra.get(6, GeoStruct.geometryType("fm").dataType))
-      return out
+      return GeomAccess.mapLeaves(ra)(
+        kid => evalNotNull(Array[Any](kid, rb)).asInstanceOf[InternalRow])
     }
     if (areal(ga) && areal(gb))
       pack(ra)(Overlay.overlayGeoms(op,
@@ -1046,16 +838,8 @@ case class StOverlay(a: Expression, b: Expression, op: Int) extends GeoExpressio
       throw new IllegalArgumentException(
         s"$opName: unsupported operand dimensions (gtype $ga × $gb) — union needs equal dimensions")
   }
-  private def collectionOf(src: InternalRow, kids: Seq[GeoAlgo.Clipped]): InternalRow = {
-    val out = new GenericInternalRow(7)
-    out.update(0, GType.Collection.toByte)
-    out.update(5, new GenericArrayData(kids.map { c =>
-      UTF8String.fromString(GeoJsonCodec.geometryToJson(
-        GeoStruct.unpackGeometry(pack(src)(c))).render): Any
-    }.toArray))
-    out.update(6, src.get(6, GeoStruct.geometryType("fm").dataType))
-    out
-  }
+  private def collectionOf(src: InternalRow, kids: Seq[GeoAlgo.Clipped]): InternalRow =
+    GeoStruct.packCollection(kids.map(pack(src)), src)
   private def evalSwapped(ra: InternalRow, rb: InternalRow): Any = {
     val ga = GeomAccess.gtype(ra); val gb = GeomAccess.gtype(rb)
     if (pointy(ga) && areal(gb))
@@ -1084,51 +868,18 @@ case class StOverlay(a: Expression, b: Expression, op: Int) extends GeoExpressio
   * the emptied ones. Planar JTS-style semantics: buffer in a locally sane
   * longitude frame (no ±360° translate machinery). A row-local scalar
   * kernel, like the overlay family. */
-case class StBufferDeg(geom: Expression, dist: Expression) extends GeoExpression {
+case class StBufferDeg(geom: Expression, dist: Expression)
+    extends KernelExpression with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(geom, dist)
-  override def dataType: DataType        = GeoStruct.geometryType
-  private def num(v: Any): Double = v match {
-    case d: Double => d
-    case f: Float  => f.toDouble
-    case i: Int    => i.toDouble
-    case l: Long   => l.toDouble
-    case x: java.math.BigDecimal => x.doubleValue()
-    case x: org.apache.spark.sql.types.Decimal => x.toDouble
-  }
-  private def buffered(r: InternalRow, d: Double): InternalRow =
-    if (GeomAccess.gtype(r) == GType.Collection) {
-      val kids = GeomAccess.childStrings(r).flatMap { str =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(str))
-          .fold(err => throw new IllegalArgumentException(err), identity)
-        Option(buffered(GeoStruct.packGeometry(g), d)).map(child =>
-          UTF8String.fromString(
-            GeoJsonCodec.geometryToJson(GeoStruct.unpackGeometry(child)).render))
-      }
-      if (kids.isEmpty) null
-      else {
-        val out = new GenericInternalRow(7)
-        out.update(0, r.getByte(0))
-        out.update(5, new GenericArrayData(kids.toArray[Any]))
-        out.update(6, r.get(6, GeoStruct.geometryType("fm").dataType))
-        out
-      }
-    } else {
-      val c = Overlay.buffer(GeomAccess.gtype(r), GeomAccess.coords(r),
-        GeomAccess.posOff(r), GeomAccess.ringOff(r), GeomAccess.partOff(r), d)
-      if (c == null) null
-      else {
-        val out = new GenericInternalRow(7)
-        out.update(0, c.gtype.toByte)
-        out.update(1, new GenericArrayData(c.coords))
-        out.update(2, new GenericArrayData(c.posOff))
-        out.update(3, new GenericArrayData(c.ringOff))
-        out.update(4, new GenericArrayData(c.partOff))
-        out.update(6, r.get(6, GeoStruct.geometryType("fm").dataType))
-        out
-      }
+  override def inputTypes = Seq(GeoStruct.geometryType, DoubleType)
+  override def dataType: DataType = GeoStruct.geometryType
+  override def evalNotNull(v: Array[Any]): Any = {
+    val d = v(1).asInstanceOf[Double]
+    GeomAccess.mapLeaves(v(0).asInstanceOf[InternalRow]) { r =>
+      GeoStruct.packClipped(Overlay.buffer(GeomAccess.gtype(r), GeomAccess.coords(r),
+        GeomAccess.posOff(r), GeomAccess.ringOff(r), GeomAccess.partOff(r), d), r)
     }
-  override protected def evalNotNull(v: Array[Any]): Any =
-    buffered(v(0).asInstanceOf[InternalRow], num(v(1)))
+  }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(c(0), c(1))
 }
@@ -1137,11 +888,11 @@ case class StBufferDeg(geom: Expression, dist: Expression) extends GeoExpression
   * OPEN rings, orientation-normalized for the winding union (shells CCW,
   * holes CW) — the per-row half of DISSOLVE aggregation: explode/collect
   * these and feed [[StUnionRings]]. Non-areal input → empty array. */
-case class StRings(geom: Expression) extends GeoExpression {
+case class StRings(geom: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(geom)
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val r = v(0).asInstanceOf[InternalRow]
     new GenericArrayData(Overlay.orientedRings(GeomAccess.gtype(r), GeomAccess.coords(r),
       GeomAccess.posOff(r), GeomAccess.ringOff(r), GeomAccess.partOff(r))
@@ -1158,23 +909,13 @@ case class StRings(geom: Expression) extends GeoExpression {
   * (dissolve is a genuinely holistic aggregate); dissolve hierarchically
   * (e.g. by tile, then by region) when a single group's boundary is
   * huge. */
-case class StUnionRings(rings: Expression) extends GeoExpression {
+case class StUnionRings(rings: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(rings)
   override def dataType: DataType        = GeoStruct.geometryType
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val arr = v(0).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     val rings = (0 until arr.numElements()).map(i => arr.getArray(i).toDoubleArray())
-    val c = Overlay.unionRings(rings)
-    if (c == null) null
-    else {
-      val out = new GenericInternalRow(7)
-      out.update(0, c.gtype.toByte)
-      out.update(1, new GenericArrayData(c.coords))
-      out.update(2, new GenericArrayData(c.posOff))
-      out.update(3, new GenericArrayData(c.ringOff))
-      out.update(4, new GenericArrayData(c.partOff))
-      out
-    }
+    GeoStruct.packClipped(Overlay.unionRings(rings), null)
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
@@ -1187,7 +928,7 @@ case class StUnionRings(rings: Expression) extends GeoExpression {
   * child (first failure wins). NOT full OGC: cross-ring/cross-part
   * interior overlap is an overlay-sized computation — probe it with
   * `st_area(st_intersection(...))` when it matters. */
-case class StIsValid(geom: Expression, asReason: Boolean) extends GeoExpression {
+case class StIsValid(geom: Expression, asReason: Boolean) extends KernelExpression {
   override def children: Seq[Expression] = Seq(geom)
   override def dataType: DataType        = if (asReason) StringType else BooleanType
   private val reasons = Array("valid", "non-finite coordinate",
@@ -1195,14 +936,10 @@ case class StIsValid(geom: Expression, asReason: Boolean) extends GeoExpression 
     "hole outside shell", "short lineal path")
   private def codeOf(r: InternalRow): Int =
     if (GeomAccess.gtype(r) == GType.Collection)
-      GeomAccess.childStrings(r).iterator.map { str =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(str))
-          .fold(err => throw new IllegalArgumentException(err), identity)
-        codeOf(GeoStruct.packGeometry(g))
-      }.find(_ != 0).getOrElse(0)
+      GeomAccess.children(r).map(codeOf).find(_ != 0).getOrElse(0)
     else Overlay.validityCode(GeomAccess.gtype(r), GeomAccess.coords(r),
       GeomAccess.posOff(r), GeomAccess.ringOff(r), GeomAccess.partOff(r))
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val code = codeOf(v(0).asInstanceOf[InternalRow])
     if (asReason) UTF8String.fromString(reasons(code)) else code == 0
   }
@@ -1212,35 +949,24 @@ case class StIsValid(geom: Expression, asReason: Boolean) extends GeoExpression 
 
 /** `st_length_m(geom)` → great-circle metres of all segments (perimeter for
   * polygons). */
-case class StLengthM(child: Expression) extends GeoExpression {
+case class StLengthM(child: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(child)
   override def dataType: DataType        = DoubleType
-  override protected def evalNotNull(v: Array[Any]): Any = {
-    val r = v(0).asInstanceOf[InternalRow]
-    if (GeomAccess.gtype(r) == GType.Collection)
-      GeomAccess.childStrings(r).map { s =>
-        val g = GeoJsonCodec.geometryOfJson(JValue.parseUnsafe(s))
-          .fold(e => throw new IllegalArgumentException(e), identity)
-        StLengthM(Literal(GeoStruct.packGeometry(g), GeoStruct.geometryType))
-          .eval(null).asInstanceOf[Double]
-      }.sum
-    else
-      GeoAlgo.lengthMeters(GeomAccess.gtype(r), GeomAccess.coords(r),
-        GeomAccess.posOff(r), GeomAccess.ringOff(r))
-  }
+  private def lengthM(r: InternalRow): Double =
+    if (GeomAccess.gtype(r) == GType.Collection) GeomAccess.children(r).map(lengthM).sum
+    else GeoAlgo.lengthMeters(GeomAccess.gtype(r), GeomAccess.coords(r),
+      GeomAccess.posOff(r), GeomAccess.ringOff(r))
+  override def evalNotNull(v: Array[Any]): Any = lengthM(v(0).asInstanceOf[InternalRow])
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
-/** `st_geometry_type(geom)` → "Point" | ... | "GeometryCollection".
-  * Codegen-enabled: appears in parse-heavy projections (q01 shape), where a
-  * CodegenFallback would eject the Project from whole-stage codegen and
-  * defeat the shared-parse subexpression elimination. */
-case class StGeometryType(child: Expression) extends GeoKernelUnary {
-  override def dataType: DataType = StringType
-  override protected def kernel   = "graft.geo.sql.GeoRuntime.geometryTypeName"
-  override protected def nullSafeEval(v: Any): Any =
-    GeoRuntime.geometryTypeName(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+/** `st_geometry_type(geom)` → "Point" | ... | "GeometryCollection". */
+case class StGeometryType(child: Expression) extends KernelExpression {
+  override def children: Seq[Expression] = Seq(child)
+  override def dataType: DataType        = StringType
+  override def evalNotNull(v: Array[Any]): Any =
+    UTF8String.fromString(GType.name(GeomAccess.gtype(v(0).asInstanceOf[InternalRow])))
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
 /** `haversine(lng1, lat1, lng2, lat2)` — great-circle metres.
@@ -1281,11 +1007,11 @@ case class HexCellExpr(lng: Expression, lat: Expression, res: Expression)
 
 /** `hex_kring(cell, k)` → all cells within grid distance k. */
 case class HexKRingExpr(cell: Expression, k: Expression)
-    extends GeoExpression with ImplicitCastInputTypes {
+    extends KernelExpression with ImplicitCastInputTypes {
   override def children: Seq[Expression]      = Seq(cell, k)
   override def inputTypes = Seq(LongType, IntegerType)
   override def dataType: DataType             = ArrayType(LongType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any =
+  override def evalNotNull(v: Array[Any]): Any =
     new GenericArrayData(HexCell.kRing(v(0).asInstanceOf[Long], v(1).asInstanceOf[Int]))
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
@@ -1294,20 +1020,14 @@ case class HexKRingExpr(cell: Expression, k: Expression)
   * wrapped boxes — a guaranteed superset of {hex_cell(p) : p ∈ geom}, the
   * soundness contract of the PIP join (SURVEY.md §2.9). */
 case class HexCoverExpr(geom: Expression, res: Expression)
-    extends GeoExpression {
+    extends KernelExpression {
   override def children: Seq[Expression] = Seq(geom, res)
   override def dataType: DataType        = ArrayType(LongType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val r   = v(0).asInstanceOf[InternalRow]
     val res = v(1) match { case i: Int => i; case l: Long => l.toInt }
-    val set = new java.util.TreeSet[java.lang.Long]()
-    GeomAccess.wrappedBoxes(r).foreach { b =>
-      HexCell.coverBox(b(0), b(1), b(2), b(3), res).foreach(set.add(_))
-    }
-    val out = new Array[Long](set.size)
-    val it  = set.iterator(); var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    new GenericArrayData(out)
+    new GenericArrayData(
+      GeomAccess.coverCells(r)(b => HexCell.coverBox(b(0), b(1), b(2), b(3), res)))
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
@@ -1332,20 +1052,14 @@ case class S2CellExpr(lng: Expression, lat: Expression, level: Expression)
 
 /** `s2_cover(geom, level)` → S2 cells (exact rect-bound quadtree descent)
   * covering the geometry's wrapped boxes. */
-case class S2CoverExpr(geom: Expression, level: Expression) extends GeoExpression {
+case class S2CoverExpr(geom: Expression, level: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(geom, level)
   override def dataType: DataType        = ArrayType(LongType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val r   = v(0).asInstanceOf[InternalRow]
     val lvl = v(1) match { case i: Int => i; case l: Long => l.toInt }
-    val set = new java.util.TreeSet[java.lang.Long]()
-    GeomAccess.wrappedBoxes(r).foreach { b =>
-      S2Cell.coverBox(b(0), b(1), b(2), b(3), lvl).foreach(set.add(_))
-    }
-    val out = new Array[Long](set.size)
-    val it  = set.iterator(); var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    new GenericArrayData(out)
+    new GenericArrayData(
+      GeomAccess.coverCells(r)(b => S2Cell.coverBox(b(0), b(1), b(2), b(3), lvl)))
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
@@ -1354,21 +1068,15 @@ case class S2CoverExpr(geom: Expression, level: Expression) extends GeoExpressio
   * (interior at coarse levels, boundary refined to maxLevel — O(perimeter)
   * covers for arbitrarily large geometries). */
 case class S2CoverMultiExpr(geom: Expression, minLevel: Expression, maxLevel: Expression)
-    extends GeoExpression {
+    extends KernelExpression {
   override def children: Seq[Expression] = Seq(geom, minLevel, maxLevel)
   override def dataType: DataType        = ArrayType(LongType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val r    = v(0).asInstanceOf[InternalRow]
     val minL = v(1).asInstanceOf[Int]
     val maxL = v(2).asInstanceOf[Int]
-    val set  = new java.util.TreeSet[java.lang.Long]()
-    GeomAccess.wrappedBoxes(r).foreach { b =>
-      S2Cell.coverBoxMulti(b(0), b(1), b(2), b(3), minL, maxL).foreach(set.add(_))
-    }
-    val cells = new Array[Long](set.size)
-    val it0   = set.iterator(); var n = 0
-    while (it0.hasNext) { cells(n) = it0.next(); n += 1 }
-    new GenericArrayData(S2Cell.normalizeCover(cells))
+    new GenericArrayData(S2Cell.normalizeCover(
+      GeomAccess.coverCells(r)(b => S2Cell.coverBoxMulti(b(0), b(1), b(2), b(3), minL, maxL))))
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(c(0), c(1), c(2))
@@ -1380,11 +1088,11 @@ case class S2CoverMultiExpr(geom: Expression, minLevel: Expression, maxLevel: Ex
   * S2 cube faces handle poles natively. */
 case class S2CoverBoxExpr(w: Expression, s: Expression, e: Expression, n: Expression,
                           minLevel: Expression, maxLevel: Expression)
-    extends GeoExpression with ImplicitCastInputTypes {
+    extends KernelExpression with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(w, s, e, n, minLevel, maxLevel)
   override def inputTypes = Seq(DoubleType, DoubleType, DoubleType, DoubleType, IntegerType, IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val cells = S2Cell.coverBoxMulti(v(0).asInstanceOf[Double], v(1).asInstanceOf[Double],
       v(2).asInstanceOf[Double], v(3).asInstanceOf[Double],
       v(4).asInstanceOf[Int], v(5).asInstanceOf[Int])
@@ -1397,10 +1105,10 @@ case class S2CoverBoxExpr(w: Expression, s: Expression, e: Expression, n: Expres
 /** `s2_ancestors(lng, lat, minLevel, maxLevel)` → the point's cell at each
   * level (the point side of the multi-level join). */
 case class S2AncestorsExpr(lng: Expression, lat: Expression, minLevel: Expression, maxLevel: Expression)
-    extends GeoExpression {
+    extends KernelExpression {
   override def children: Seq[Expression] = Seq(lng, lat, minLevel, maxLevel)
   override def dataType: DataType        = ArrayType(LongType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any =
+  override def evalNotNull(v: Array[Any]): Any =
     new GenericArrayData(S2Cell.ancestors(v(0).asInstanceOf[Double], v(1).asInstanceOf[Double],
       v(2).asInstanceOf[Int], v(3).asInstanceOf[Int]))
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
@@ -1432,11 +1140,11 @@ case class TileBoundsExpr(key: Expression)
   * interpreted WITHOUT subexpression elimination and re-scan the coords
   * four times. */
 case class TileCoverExpr(geom: Expression, z: Expression)
-    extends GeoExpression with ImplicitCastInputTypes {
+    extends KernelExpression with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(geom, z)
   override def inputTypes = Seq(GeoStruct.geometryType, IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any = {
+  override def evalNotNull(v: Array[Any]): Any = {
     val r = v(0).asInstanceOf[InternalRow]
     // per-ring WRAPPED boxes (1-2 in-range intervals per ring): an
     // antimeridian-crossing ring covers its two seam-side slivers instead
@@ -1459,16 +1167,15 @@ case class TileCoverExpr(geom: Expression, z: Expression)
 
 /** `tile_cover_box(w, s, e, n, z)` → packed keys of every z-tile
   * intersecting the box (sound cover; throws past 2^20 tiles — lower z).
-  * Interpreted, like the hex/s2 covers: runs once per geometry, not per
-  * (row, tile). */
+  * Runs once per geometry, not per (row, tile). */
 case class TileCoverBoxExpr(w: Expression, s: Expression, e: Expression,
                             n: Expression, z: Expression)
-    extends GeoExpression with ImplicitCastInputTypes {
+    extends KernelExpression with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(w, s, e, n, z)
   override def inputTypes =
     Seq(DoubleType, DoubleType, DoubleType, DoubleType, IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any =
+  override def evalNotNull(v: Array[Any]): Any =
     new GenericArrayData(GeoAlgo.tileCoverBox(
       v(0).asInstanceOf[Double], v(1).asInstanceOf[Double],
       v(2).asInstanceOf[Double], v(3).asInstanceOf[Double], v(4).asInstanceOf[Int]))

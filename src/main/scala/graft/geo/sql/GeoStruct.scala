@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.geo.algo.GeoAlgo
 import graft.geo.json.{GeoJsonCodec, JValue}
 import graft.geo.model.GeoModel._
 import graft.geo.model.GeoModel.Geometry
@@ -111,6 +112,33 @@ object GeoStruct {
         out.update(3, new GenericArrayData(ringOff))
         out.update(4, new GenericArrayData(partOff))
     }
+    out
+  }
+
+  /** Pack a construction result carrying `src`'s foreign members (the
+    * clip-family convention; a null `src` packs none). A null result — an
+    * empty construction — stays null. */
+  def packClipped(c: GeoAlgo.Clipped, src: InternalRow): InternalRow =
+    if (c == null) null
+    else {
+      val out = new GenericInternalRow(7)
+      out.update(0, c.gtype.toByte)
+      out.update(1, new GenericArrayData(c.coords))
+      out.update(2, new GenericArrayData(c.posOff))
+      out.update(3, new GenericArrayData(c.ringOff))
+      out.update(4, new GenericArrayData(c.partOff))
+      if (src != null) out.update(6, src.get(6, fmType))
+      out
+    }
+
+  /** A GeometryCollection of packed `kids` (re-rendered to their JSON child
+    * texts) carrying `src`'s foreign members. */
+  def packCollection(kids: Seq[InternalRow], src: InternalRow): InternalRow = {
+    val out = new GenericInternalRow(7)
+    out.update(0, GType.Collection.toByte)
+    out.update(5, new GenericArrayData(kids.map(k =>
+      UTF8String.fromString(GeoJsonCodec.geometryToJson(unpackGeometry(k)).render): Any).toArray))
+    out.update(6, src.get(6, fmType))
     out
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-import graft.geo.sql.GeoExpression
+import graft.KernelExpression
 
 /** Product-quantization kernels for the persisted ANN index: an embedding
   * splits into `m` subspaces of `dsub` dims; each subspace quantizes to one
@@ -105,15 +105,15 @@ trait PqBooksArg { self: Expression =>
 /** `pq_encode(vec, books, m, dsub[, base])` → struct<code: binary,
   * rnorm: double>. With the optional 5th argument `vec` is a RESIDUAL and
   * `base` the coarse centroid it was taken against (rnorm = ||base +
-  * recon||). Build-time (one pass over the corpus at train); interpreted. */
-case class PqEncode(children: Seq[Expression]) extends GeoExpression with PqBooksArg {
+  * recon||). Build-time (one pass over the corpus at train). */
+case class PqEncode(children: Seq[Expression]) extends KernelExpression with PqBooksArg {
   require(children.length == 4 || children.length == 5,
     s"pq_encode takes (vec, books, m, dsub[, base]), got ${children.length} args")
   override def books: Expression = children(1)
   override def dataType: DataType = StructType(Seq(
     StructField("code", BinaryType, nullable = false),
     StructField("rnorm", DoubleType, nullable = false)))
-  override protected def evalNotNull(v: Array[Any]): Any =
+  override def evalNotNull(v: Array[Any]): Any =
     PqKernels.encode(v(0).asInstanceOf[ArrayData], booksArr,
       v(2).asInstanceOf[Int], v(3).asInstanceOf[Int],
       if (v.length > 4) v(4).asInstanceOf[ArrayData] else null)
@@ -122,12 +122,12 @@ case class PqEncode(children: Seq[Expression]) extends GeoExpression with PqBook
 }
 
 /** `pq_lut(qvec, books, m, dsub)` → array<double> of m*256 — once per
-  * query row; interpreted (query side is the small side by construction). */
+  * query row (the query side is the small side by construction). */
 case class PqLut(vec: Expression, books: Expression, m: Expression, dsub: Expression)
-    extends GeoExpression with PqBooksArg {
+    extends KernelExpression with PqBooksArg {
   override def children: Seq[Expression] = Seq(vec, books, m, dsub)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any =
+  override def evalNotNull(v: Array[Any]): Any =
     PqKernels.lut(v(0).asInstanceOf[ArrayData], booksArr,
       v(2).asInstanceOf[Int], v(3).asInstanceOf[Int])
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =

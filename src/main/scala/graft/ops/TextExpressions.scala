@@ -6,12 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.geo.sql.GeoExpression
+import graft.KernelExpression
 
 /** Text/vector kernels for the large-scale training-data operators
   * (dedup, similarity, language-ID, fingerprinting). Pure single-pass
   * functions implemented as Catalyst expressions (preference order of the
-  * build brief: native Expression > UDF), interpreted via CodegenFallback.
+  * build brief: native Expression > UDF); each generates real code, as a
+  * static-call Spark template or a [[graft.KernelExpression]].
   */
 object TextKernels {
 
@@ -479,10 +480,10 @@ case class SimHash64(text: Expression, shingle: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
-case class NgramJaccard(a: Expression, b: Expression, n: Expression) extends GeoExpression {
+case class NgramJaccard(a: Expression, b: Expression, n: Expression) extends KernelExpression {
   override def children: Seq[Expression] = Seq(a, b, n)
   override def dataType: DataType        = DoubleType
-  override protected def evalNotNull(v: Array[Any]): Any =
+  override def evalNotNull(v: Array[Any]): Any =
     TextKernels.ngramJaccard(v(0).asInstanceOf[UTF8String].toString,
       v(1).asInstanceOf[UTF8String].toString, v(2).asInstanceOf[Int])
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
@@ -511,10 +512,10 @@ case class WinnowFingerprint(text: Expression, k: Expression, w: Expression)
 /** `common_substring(a, b, len)` — true iff the two texts share a verified
   * (char-exact) common substring of at least `len` characters. */
 case class CommonSubstring(a: Expression, b: Expression, len: Expression)
-    extends GeoExpression {
+    extends KernelExpression {
   override def children: Seq[Expression] = Seq(a, b, len)
   override def dataType: DataType        = BooleanType
-  override protected def evalNotNull(v: Array[Any]): Any =
+  override def evalNotNull(v: Array[Any]): Any =
     TextKernels.hasCommonSubstring(v(0).asInstanceOf[UTF8String].toString,
       v(1).asInstanceOf[UTF8String].toString, v(2).asInstanceOf[Int])
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))

@@ -65,7 +65,7 @@ object PlanDump {
     }
 
     dump("multi-field extraction: whole-stage codegen + one shared parse",
-      "The codec kernels generate real code (static GeoRuntime calls), so " +
+      "The codec kernels generate real code (KernelExpression), so " +
         "the Project stays inside WholeStageCodegen (`*(N)` prefix) and " +
         "subexpression elimination evaluates fromgeojsongeom ONCE for all " +
         "three field extractions (with CodegenFallback this re-parsed per " +
@@ -82,7 +82,7 @@ object PlanDump {
 
     dump("Random generator round-trip (q34 shape): whole-stage codegen, one shared generator call",
       "random_geojson / with_feature_props / with_feature_geometry generate " +
-        "real code (static GeoRuntime calls) like the codec kernels, so the " +
+        "real code (static GeoRuntime calls), like the codec kernels, so the " +
         "q34 projection — which references the generated text three times " +
         "(kind, round-trip, equality) after CollapseProject inlining — stays " +
         "inside WholeStageCodegen and subexpression elimination evaluates the " +

@@ -13,6 +13,9 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a janino compile failure fails the spec instead of silently running
+      // the stage interpreted
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.geo.sql.GeoFunctions.register(s)

@@ -550,4 +550,35 @@ class ClipSpec extends AnyFunSuite {
       .select(st_area($"p")).as[Double].collect().toSeq
     assert(parts.sorted == Seq(100.0, 100.0))
   }
+
+  test("Int, Long and decimal-literal arguments give the DOUBLE-argument result") {
+    // a 24-vertex star: simplify, clip, erase and buffer all change it
+    val star = (0 until 24).map { i =>
+      val a = 2 * math.Pi * i / 24
+      val r = if (i % 2 == 0) 10.0 else 9.5
+      (r * math.cos(a), r * math.sin(a))
+    }
+    val df = Seq(polyJson(star)).toDF("json").select(from_geojson_geom($"json").as("g"))
+    def same(calls: String*): Unit = {
+      val row  = df.selectExpr(calls.map(c => s"to_geojson_geom($c)"): _*).head()
+      val outs = calls.indices.map(row.getString)
+      assert(outs.head != null && outs.head != df.selectExpr("to_geojson_geom(g)").as[String].head(),
+        s"${calls.head} must change the star")
+      assert(outs.forall(_ == outs.head), calls.zip(outs).mkString("\n"))
+    }
+    same("st_simplify(g, 2.0d)", "st_simplify(g, 2)", "st_simplify(g, CAST(2 AS BIGINT))",
+      "st_simplify(g, 2.0)")
+    same("st_simplify(g, 0.5d)", "st_simplify(g, 0.5)")
+    same("st_clip_box(g, -5.0d, -4.0d, 6.0d, 3.0d)", "st_clip_box(g, -5, -4, 6, 3)",
+      "st_clip_box(g, CAST(-5 AS BIGINT), CAST(-4 AS BIGINT), CAST(6 AS BIGINT), CAST(3 AS BIGINT))",
+      "st_clip_box(g, -5.0, -4.0, 6.0, 3.0)")
+    same("st_clip_box(g, -5.5d, -4.25d, 6.1d, 3.3d)", "st_clip_box(g, -5.5, -4.25, 6.1, 3.3)")
+    same("st_erase_box(g, -5.0d, -4.0d, 6.0d, 3.0d)", "st_erase_box(g, -5, -4, 6, 3)",
+      "st_erase_box(g, CAST(-5 AS BIGINT), CAST(-4 AS BIGINT), CAST(6 AS BIGINT), CAST(3 AS BIGINT))",
+      "st_erase_box(g, -5.0, -4.0, 6.0, 3.0)")
+    same("st_erase_box(g, -5.5d, -4.25d, 6.1d, 3.3d)", "st_erase_box(g, -5.5, -4.25, 6.1, 3.3)")
+    same("st_buffer_deg(g, 1.0d)", "st_buffer_deg(g, 1)", "st_buffer_deg(g, CAST(1 AS BIGINT))",
+      "st_buffer_deg(g, 1.0)")
+    same("st_buffer_deg(g, 0.3d)", "st_buffer_deg(g, 0.3)")
+  }
 }

@@ -727,28 +727,26 @@ class OpsSpec extends AnyFunSuite {
   test("kll probe expressions COMPILE under codegen (no silent whole-stage fallback)") {
     import Sketches._
     Sketches.register(spark)
-    // fallback=false turns a janino compile failure into a hard error
-    // instead of a silent interpreted downgrade of the whole stage — the
-    // round-6 ADVICE defect: kllQuantile returns Any (nullable) and
-    // defineCodeGen assigned it into the primitive long slot, which janino
-    // rejects, ejecting every kll_quantile stage from codegen.
-    val old = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val rows = spark.range(300)
-        .select((col("id") % 7).as("g"), ((col("id") * 37) % 1000).as("v"))
-        .groupBy("g").agg(kll_sketch(col("v"), 64).as("s"))
-        .select(col("g"), kll_quantile(col("s.v"), lit(0.5)).as("p50"),
-          kll_rank(col("s.v"), lit(500L)).as("r"), kll_n(col("s.v")).as("n"))
-        .collect() // throws SparkException(CompileException) if codegen breaks
-      assert(rows.length == 7 && rows.forall(!_.isNullAt(1)))
-      // the empty-sketch (n = 0) null guard must work in GENERATED code too
-      val empty = spark.range(0).select(col("id").as("v"))
-        .agg(kll_sketch(col("v"), 64).as("s"))
-        .select(kll_quantile(col("s.v"), lit(0.5)).as("q"), lit(1).as("k"))
-        .head()
-      assert(empty.isNullAt(0), "empty sketch must yield NULL under codegen")
-    } finally spark.conf.set("spark.sql.codegen.fallback", old)
+    // SparkTestBase sets codegen.fallback=false, which turns a janino
+    // compile failure into a hard error instead of a silent interpreted
+    // downgrade of the whole stage — the round-6 ADVICE defect:
+    // kllQuantile returns Any (nullable) and defineCodeGen assigned it into
+    // the primitive long slot, which janino rejects, ejecting every
+    // kll_quantile stage from codegen.
+    assert(spark.conf.get("spark.sql.codegen.fallback") == "false")
+    val rows = spark.range(300)
+      .select((col("id") % 7).as("g"), ((col("id") * 37) % 1000).as("v"))
+      .groupBy("g").agg(kll_sketch(col("v"), 64).as("s"))
+      .select(col("g"), kll_quantile(col("s.v"), lit(0.5)).as("p50"),
+        kll_rank(col("s.v"), lit(500L)).as("r"), kll_n(col("s.v")).as("n"))
+      .collect() // throws SparkException(CompileException) if codegen breaks
+    assert(rows.length == 7 && rows.forall(!_.isNullAt(1)))
+    // the empty-sketch (n = 0) null guard must work in GENERATED code too
+    val empty = spark.range(0).select(col("id").as("v"))
+      .agg(kll_sketch(col("v"), 64).as("s"))
+      .select(kll_quantile(col("s.v"), lit(0.5)).as("q"), lit(1).as("k"))
+      .head()
+    assert(empty.isNullAt(0), "empty sketch must yield NULL under codegen")
   }
 
   test("KLL quantile sketch: exact mode, planted distributions, merge ≡ one-shot bounds") {
